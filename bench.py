@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -93,6 +94,26 @@ TIER2 = [
 # of merit — plus per-query entries. Pure SQL plans: same steady-state
 # methodology as HEADLINE.
 TPCH = [f"q_sql_tpch_q{n}" for n in range(1, 23)]
+
+
+def prior_queries_min(root: Path) -> dict[str, float]:
+    """``parsed.queries_min`` of the newest recorded round: the
+    highest-numbered ``BENCH_rNN.json`` under ``root`` that carries one.
+    Exact names only — a ``BENCH_rNN_c8.json`` sibling was measured at
+    another core count, and records whose JSON line was truncated
+    (``parsed: null``) are skipped. ``{}`` when none qualifies."""
+    best_round, best = -1, {}
+    for path in root.glob("BENCH_r*.json"):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", path.name)
+        if not m or int(m.group(1)) <= best_round:
+            continue
+        try:
+            mins = (json.loads(path.read_text()).get("parsed") or {}).get("queries_min")
+        except (OSError, ValueError, AttributeError):
+            continue
+        if mins:
+            best_round, best = int(m.group(1)), mins
+    return best
 
 
 def main() -> int:
@@ -182,13 +203,7 @@ def main() -> int:
     # just the TPC-H tail. measured() keeps the min-of-medians and the
     # global min, so extra attempts can only sharpen a floor estimate,
     # never manufacture one.
-    prev_mins: dict[str, float] = {}
-    prev_path = Path(__file__).resolve().parent / "BENCH_r14.json"
-    try:
-        prev = json.loads(prev_path.read_text()).get("parsed") or {}
-        prev_mins = prev.get("queries_min") or {}
-    except (OSError, ValueError):
-        prev_mins = {}
+    prev_mins = prior_queries_min(Path(__file__).resolve().parent)
 
     def rerun_for(name: str):
         if name in HEADLINE:

@@ -19,7 +19,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from pkg2_spark.session import ensure_runtime_confs
+from pkg2_spark.session import BoundedMemo, ensure_runtime_confs, session_key
 
 TABLES = [
     "region",
@@ -64,10 +64,10 @@ STATS_COLUMNS = {
     "embeddings": "vec_id, label",
 }
 
-# Memoize registration per (session id, sf_dir) so the driver's per-query
+# Memoize registration per (session, sf_dir) so the driver's per-query
 # callable pattern doesn't re-register ten views on every call (SURVEY.md §6:
-# fixed costs must stay fixed).
-_REGISTERED: dict[tuple[int, str], dict[str, DataFrame]] = {}
+# fixed costs must stay fixed). An evicted entry re-registers on next use.
+_REGISTERED = BoundedMemo(8)
 
 # Temp views are GLOBAL per session (last registration wins), so when one
 # session alternates scale factors (scale_probe, perturbation sweeps) the
@@ -150,27 +150,23 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     Idempotent and memoized per (session, sf_dir): repeated calls from the
     driver's per-query loop cost a dict lookup, not ten parquet-footer reads.
     """
-    sid = id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)
-    key = (sid, sf_dir)
-    cached = _REGISTERED.get(key)
-    if cached is not None:
-        if _VIEWS_FOR.get(sid) != sf_dir:
-            for name, df in cached.items():
-                df.createOrReplaceTempView(name)
-            _VIEWS_FOR[sid] = sf_dir
-        return cached
-    ensure_runtime_confs(spark)
-    try:
-        catalog_names = _ensure_stats_tables(spark, sf_dir)
-    except Exception:
-        # A foreign session whose catalog rejects table creation still gets
-        # the full query surface — just without CBO statistics.
-        catalog_names = {}
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = read_table(spark, sf_dir, name, catalog_names.get(name))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    _REGISTERED[key] = out
-    _VIEWS_FOR[sid] = sf_dir
-    return out
+    sid = session_key(spark)
+
+    def register() -> dict[str, DataFrame]:
+        ensure_runtime_confs(spark)
+        try:
+            catalog_names = _ensure_stats_tables(spark, sf_dir)
+        except Exception:
+            # A foreign session whose catalog rejects table creation still
+            # gets the full query surface — just without CBO statistics.
+            catalog_names = {}
+        # A new entry always points the views, even at a reused session id.
+        _VIEWS_FOR.pop(sid, None)
+        return {name: read_table(spark, sf_dir, name, catalog_names.get(name)) for name in TABLES}
+
+    tables = _REGISTERED.get((sid, sf_dir), register)
+    if _VIEWS_FOR.get(sid) != sf_dir:
+        for name, df in tables.items():
+            df.createOrReplaceTempView(name)
+        _VIEWS_FOR[sid] = sf_dir
+    return tables

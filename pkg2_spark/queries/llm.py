@@ -37,7 +37,7 @@ from pkg2_spark.operators.text import (
     tokens_col,
 )
 from pkg2_spark.registry import QUERIES, query
-from pkg2_spark.session import fan_out_scan, truncate_lineage
+from pkg2_spark.session import BoundedMemo, fan_out_scan, plan_key, truncate_lineage
 
 _K = 8  # MinHash signature length
 _BANDS_R = 4  # rows per LSH band (b=2, r=4: the synthetic corpus has a tiny
@@ -766,57 +766,29 @@ def _icbrt(m: int) -> int:
     return c - 1
 
 
-# Session-scoped IVF memo, ONE entry per distinct corpus frame: k values
-# AND the constructed quantizer frames (checkpointed assignments). Keyed on
-# the underlying plan object identity — load_tables memoizes the DataFrame
-# per (session, sf_dir), so every IVF-family query over the same corpus in
-# a session shares ONE quantizer construction (the r7 verdict's task:
-# ann_ivf/ann_recall/ann_mprobe/semdedup each re-paid the n·k1 cross).
-# Bounded LRU (the r7 _IVF_K_MEMO pinned every frame ever passed for the
-# life of the session); ivf_invalidate() is the explicit lifecycle hook
-# (the decade probe uses it to keep timing CONSTRUCTION, not memo hits).
-from collections import OrderedDict  # noqa: E402
-
-_IVF_MEMO: OrderedDict[int, dict] = OrderedDict()
-_IVF_MEMO_MAX = 4
+# Process-wide IVF memo, one entry per corpus plan: k values AND the
+# checkpointed quantizer frames, so every IVF-family query over one corpus
+# shares ONE construction of the n·k1 cross. In-memory corpora fall back to
+# id(e._jdf); the entry's "frame" reference keeps that id from being reused
+# while the entry lives. ivf_invalidate() is the lifecycle hook (the decade
+# probe uses it to time CONSTRUCTION, not memo hits).
+_IVF_MEMO = BoundedMemo(4)
 
 
 def _ivf_memo(e) -> dict:
-    # Keyed by the CANONICALIZED analyzed plan, not the Py4J object id
-    # (r14): callers that derive the corpus per invocation (base =
-    # e.filter(...)) get a fresh _jdf every call, so an id() key missed
-    # the memo and re-ran the full n·(k1+k2+2·k3) tree construction each
-    # time — q_vec_ivf_incr warm was 12s instead of ~3s. Same-session
-    # identical FILE-BACKED plans read identical data (deterministic
-    # sources), which is exactly the sharing the memo exists for.
-    # In-memory frames keep the id() key: a LocalRelation/RDD plan string
-    # does NOT embed the rows, so two different createDataFrame corpora
-    # would canonicalize identically and collide.
-    try:
-        key = e._jdf.queryExecution().analyzed().canonicalized().toString()
-        if "LocalRelation" in key or "LogicalRDD" in key or "ExistingRDD" in key:
-            key = id(e._jdf)
-    except Exception:
-        key = id(e._jdf) if hasattr(e, "_jdf") else id(e)
-    ent = _IVF_MEMO.get(key)
-    if ent is None:
-        ent = {"frame": e}
-        _IVF_MEMO[key] = ent
-    _IVF_MEMO.move_to_end(key)
-    while len(_IVF_MEMO) > _IVF_MEMO_MAX:
-        _IVF_MEMO.popitem(last=False)
-    return ent
+    key = plan_key(e) or (id(e._jdf) if hasattr(e, "_jdf") else id(e))
+    return _IVF_MEMO.get(key, lambda: {"frame": e})
 
 
 def ivf_invalidate() -> None:
     """Drop every memoized quantizer artifact. The memo holds at most
-    _IVF_MEMO_MAX corpus frames plus their checkpointed assignment frames;
+    four corpus frames plus their checkpointed assignment frames;
     call this to release them (benchmark isolation, corpus replaced)."""
     _IVF_MEMO.clear()
 
 
 def _ivf_ks(e) -> tuple[int, int]:
-    """(k12, k3) for the corpus — one count job per corpus per session.
+    """(k12, k3) for the corpus — one count job per memoized corpus.
     k12 sizes the level-1 codebook and the level-2 seed target; k3 is the
     LEGACY fixed-allocation per-parent count, retained as the expected
     children-per-level-2-cell figure for probes/tests (actual level-2/3
@@ -1112,7 +1084,7 @@ def _ivf_tree(e):
     in the IVF memo:
     ann_ivf / ann_recall / ann_mprobe / ann_tune / semdedup / ivfpq /
     ivf_incr over
-    the same corpus in a session share ONE construction instead of each
+    the same corpus in a process share ONE construction instead of each
     re-paying the n·(k1+k2+2·k3) scoring passes."""
     ent = _ivf_memo(e)
     if "tree" in ent:

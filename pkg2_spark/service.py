@@ -30,6 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from pkg2_spark.engine import Engine
+from pkg2_spark.session import truncate_lineage
 
 DEFAULT_MAX_ROWS = 200
 
@@ -317,7 +318,7 @@ class QueryService:
                 tokenize(corpus)
                 .groupBy("token")
                 .agg(F.count(F.lit(1)).alias("c"))
-                .localCheckpoint()
+                .transform(truncate_lineage)
             )
             self._lm_state = (cnt, cnt.agg(F.sum("c")).collect()[0][0])
         return self._lm_state

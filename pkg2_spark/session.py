@@ -15,7 +15,9 @@ read of the affected file).
 from __future__ import annotations
 
 import os
+import threading
 import warnings
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
@@ -165,10 +167,15 @@ def truncate_lineage(df):
     fast if no dir is set. Applied via ``.transform(truncate_lineage)``
     at every call site, so the loop code itself is posture-free.
     """
-    spark = df.sparkSession
+    reliable = _reliable_posture(df.sparkSession)
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
+
+
+def _reliable_posture(spark: SparkSession) -> bool:
+    """True for reliable checkpoint(), False for localCheckpoint()."""
     mode = spark.conf.get("spark.pkg2_spark.lineageTruncate", "auto")
     if mode == "local":
-        return df.localCheckpoint()
+        return False
     has_dir = spark.sparkContext.getCheckpointDir() is not None
     if mode == "reliable" and not has_dir:
         raise ValueError(
@@ -177,7 +184,7 @@ def truncate_lineage(df):
         )
     if mode != "reliable" and has_dir:
         _warn_if_checkpoints_unreaped(spark)
-    return df.checkpoint(eager=True) if has_dir else df.localCheckpoint()
+    return has_dir
 
 
 _UNREAPED_CHECKPOINTS_WARNED = False
@@ -210,7 +217,7 @@ def _warn_if_checkpoints_unreaped(spark: SparkSession) -> None:
             "until you delete them. Set that conf at session build, clean "
             f"{spark.sparkContext.getCheckpointDir()!r} yourself, or pin "
             "spark.pkg2_spark.lineageTruncate=local.",
-            stacklevel=3,
+            stacklevel=4,
         )
 
 
@@ -223,21 +230,9 @@ def truncate_lineage_lazy(df):
     one eager action per round vs truncate_lineage. Do NOT use when the
     next action may compute only a partition subset (isEmpty, unordered
     limit): the missing-partition repair job makes lazy SLOWER — that trap
-    is why truncate_lineage_counted pairs the lazy mark with count().
-    Posture seam (local vs reliable checkpoint) identical to
-    truncate_lineage."""
-    spark = df.sparkSession
-    mode = spark.conf.get("spark.pkg2_spark.lineageTruncate", "auto")
-    has_dir = spark.sparkContext.getCheckpointDir() is not None
-    if mode == "reliable" and not has_dir:
-        raise ValueError(
-            "spark.pkg2_spark.lineageTruncate=reliable requires "
-            "sc.setCheckpointDir(<reliable storage path>)"
-        )
-    use_reliable = has_dir and mode != "local"
-    if use_reliable and mode != "reliable":
-        _warn_if_checkpoints_unreaped(spark)
-    return df.checkpoint(eager=False) if use_reliable else df.localCheckpoint(eager=False)
+    is why truncate_lineage_counted pairs the lazy mark with count()."""
+    reliable = _reliable_posture(df.sparkSession)
+    return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
 
 
 def truncate_lineage_counted(df):
@@ -260,3 +255,55 @@ def truncate_lineage_counted(df):
     """
     out = truncate_lineage_lazy(df)
     return out, out.count()
+
+
+class BoundedMemo:
+    """Process-wide LRU get-or-build cache of at most ``bound`` entries:
+    the engine's one memo mechanism. Entries hold metadata or checkpointed
+    frames, never result rows. ``build`` runs outside the lock; when two
+    threads build one key, the first stored value wins for both."""
+
+    def __init__(self, bound: int):
+        self.bound = bound
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key, build):
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                return self._entries[key]
+        value = build()
+        with self._lock:
+            value = self._entries.setdefault(key, value)
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.bound:
+                self._entries.popitem(last=False)
+        return value
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+    def __iter__(self):
+        with self._lock:
+            return iter(list(self._entries))
+
+
+def plan_key(df) -> str | None:
+    """Memo key for a DataFrame: its canonicalized analyzed plan, shared by
+    frames rebuilt per call over the same files. ``None`` for in-memory
+    plans, whose plan string does not embed the rows: two different
+    ``createDataFrame`` corpora would otherwise collide."""
+    try:
+        key = df._jdf.queryExecution().analyzed().canonicalized().toString()
+    except Exception:
+        return None
+    if "LocalRelation" in key or "LogicalRDD" in key or "ExistingRDD" in key:
+        return None
+    return key
+
+
+def session_key(spark) -> int:
+    """Identity of a SparkSession in per-session memo keys."""
+    return id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)

@@ -21,29 +21,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import TimestampType
 
 from pkg2_spark.queries.relational import IO_DIR
-from pkg2_spark.session import ensure_runtime_confs
+from pkg2_spark.session import BoundedMemo, ensure_runtime_confs
 
 
-# Schema memo for events_stream, keyed by the source file's identity
-# (path, size, mtime): every streaming query calls events_stream at least
-# once per INVOCATION (the stream-stream joins twice), and each call paid a
-# batch parquet footer read (~0.1 s of driver latency) to recover a schema
-# that cannot change unless the file itself does. Metadata only — no rows,
-# no results — and the mtime/size key re-reads after any testdata
-# regeneration.
-_SCHEMA_MEMO: dict[tuple[str, int, float], object] = {}
+# Schema memo for events_stream, keyed by the source file's identity: every
+# streaming query calls events_stream at least once per INVOCATION, and each
+# call paid a parquet footer read (~0.1 s of driver latency) for a schema
+# that cannot change unless the file does. The ns mtime re-reads after any
+# rewrite, even one within a float mtime's resolution.
+_SCHEMA_MEMO = BoundedMemo(8)
 
 
 def _events_schema(spark: SparkSession, src: str):
     try:
-        key = (src, os.path.getsize(src), os.path.getmtime(src))
+        st = os.stat(src)
     except OSError:
         return spark.read.parquet(src).schema
-    if key not in _SCHEMA_MEMO:
-        if len(_SCHEMA_MEMO) >= 8:  # bounded: a handful of scales per run
-            _SCHEMA_MEMO.clear()
-        _SCHEMA_MEMO[key] = spark.read.parquet(src).schema
-    return _SCHEMA_MEMO[key]
+    key = (src, st.st_size, st.st_mtime_ns)
+    return _SCHEMA_MEMO.get(key, lambda: spark.read.parquet(src).schema)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -51,6 +51,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pkg2_spark.session import truncate_lineage
+
 _LOG_FMT = "{:020d}.json"
 
 
@@ -667,7 +669,7 @@ class Table:
         # three separate jobs (bounds, findTouchedFiles, the rewrite's
         # anti-join) and a derived `updates` frame would otherwise
         # re-scan its source per job.
-        keys = updates.select(key).distinct().localCheckpoint(eager=True)
+        keys = updates.select(key).distinct().transform(truncate_lineage)
         bounds = keys.agg(
             F.min(key).alias("lo"), F.max(key).alias("hi")
         ).collect()[0]

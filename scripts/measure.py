@@ -1,9 +1,10 @@
-"""Round-14 optimization measurement harness (guide §1).
+"""Query measurement harness: formatted plans and steady-state timings.
 
 Usage:
-  python scripts/r15_measure.py plans [--tag before|after] [query ...]
-      Write .explain("formatted") for each query to plans/r15/<q>_<tag>.txt.
-  python scripts/r15_measure.py time [--sink noop|collect] [--runs 3] [query ...]
+  python scripts/measure.py plans --out DIR [--tag before|after] [query ...]
+      Write .explain("formatted") for each query to DIR/<q>_<tag>.txt
+      (e.g. --out plans/r16 for a round's before/after plan pairs).
+  python scripts/measure.py time [--sink noop|collect] [--runs 3] [query ...]
       Per-query steady-state timing: 2 warm-ups then median of N, using the
       noop sink by default so the computation (not result pickling) is timed.
 
@@ -33,26 +34,31 @@ def main() -> int:
     args = sys.argv[1:]
     mode = args.pop(0) if args else "time"
     tag = "before"
+    outdir = None
     sink = "noop"
     runs = 3
     while args and args[0].startswith("--"):
         flag = args.pop(0)
-        if flag == "--tag":
+        if flag == "--out":
+            outdir = Path(args.pop(0))
+        elif flag == "--tag":
             tag = args.pop(0)
         elif flag == "--sink":
             sink = args.pop(0)
         elif flag == "--runs":
             runs = int(args.pop(0))
     names = args or BENCH_SET
+    if mode == "plans" and outdir is None:
+        print("plans mode needs --out DIR", file=sys.stderr)
+        return 2
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_session(app_name="pkg2_r15_measure", shuffle_partitions=8)
+    spark = get_session(app_name="pkg2_measure", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     load_tables(spark, sf_dir)
     queries = all_queries()
 
     if mode == "plans":
-        outdir = Path(__file__).resolve().parent.parent / "plans" / "r15"
         outdir.mkdir(parents=True, exist_ok=True)
         import contextlib
         import io

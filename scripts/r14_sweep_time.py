@@ -5,7 +5,7 @@ noop sink (plan construction + every job the operator submits — the honest
 latency for iterative/streaming shapes), keeping the MIN of the two so a
 first-invocation fixture build or JIT warm-up does not read as query cost.
 Purpose is ranking, not benchmarking: anything slow here gets the full
-r14_measure.py treatment before/after a change.
+scripts/measure.py treatment before/after a change.
 
 Usage: python scripts/r14_sweep_time.py [--out tmp_io/sweep_time_r14.json]
 """

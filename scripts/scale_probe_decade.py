@@ -238,7 +238,7 @@ def main() -> int:
         return 0
 
     def timed(name: str, sf: str) -> float:
-        # ivf_invalidate before EVERY run: the session-scoped quantizer
+        # ivf_invalidate before EVERY run: the process-wide quantizer
         # memo (r8) would otherwise serve runs 2..N from the checkpointed
         # assignment and the probe would stop measuring CONSTRUCTION —
         # the quantity whose scaling this probe exists to bound.

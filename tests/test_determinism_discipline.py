@@ -20,6 +20,7 @@ occurrence fails until it adopts the discipline.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 from hypothesis import given, strategies as st
 
@@ -86,3 +87,15 @@ def test_floor_scaled_integer_sum_is_permutation_invariant(xs, rnd):
     shuffled = list(scaled)
     rnd.shuffle(shuffled)
     assert sum(scaled) == sum(shuffled)
+
+
+def test_lineage_truncation_has_one_primitive():
+    # Every checkpoint goes through session.truncate_lineage*, so the
+    # local-vs-reliable posture is decided in one place.
+    pkg = Path(__file__).resolve().parent.parent / "pkg2_spark"
+    callers = {
+        p.name
+        for p in pkg.rglob("*.py")
+        if re.search(r"\.localCheckpoint\(", p.read_text())
+    }
+    assert callers == {"session.py"}, callers
