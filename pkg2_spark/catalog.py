@@ -76,6 +76,12 @@ _REGISTERED = BoundedMemo(8)
 _VIEWS_FOR: dict[int, str] = {}
 
 
+def sf_tag(sf_dir: str) -> str:
+    """Short content address of an sf_dir, for catalog table names that
+    must not collide across scale factors in one session."""
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+
+
 def _ensure_stats_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Register each parquet file as an EXTERNAL catalog table and ANALYZE it.
 
@@ -91,7 +97,7 @@ def _ensure_stats_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     several scale factors (scripts/scale_probe.py does)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = sf_tag(sf_dir)
 
     def register(name: str) -> tuple[str, str]:
         tbl = f"pkg2_{tag}_{name}"

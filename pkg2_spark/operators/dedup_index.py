@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pkg2_spark.operators.lsh import banded_pairs
@@ -45,6 +44,22 @@ STATE_SCHEMAS = {
 }
 
 
+def _write_state(df: DataFrame, state_dir: str, name: str) -> None:
+    """Write one state table, refusing a frame whose column names or
+    types differ from ``STATE_SCHEMAS[name]``. Readers apply that schema
+    without inference, so a mismatched write (e.g. an int ``vec_id``)
+    would otherwise only fail later, on the first read of the state.
+    Column order is free: parquet columns are matched by name."""
+    fields = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+    want = STATE_SCHEMAS[name]
+    if dict(fields) != dict(col.split() for col in want.split(", ")):
+        got = ", ".join(f"{n} {t}" for n, t in fields)
+        raise ValueError(
+            f"dedup index table {name!r} has columns ({got}); the state format needs ({want})"
+        )
+    df.write.parquet(os.path.join(state_dir, name))
+
+
 def build_state(
     corpus: DataFrame,
     out_dir: str,
@@ -55,19 +70,19 @@ def build_state(
     """Materialize the dedup index for ``corpus`` (vec_id, embedding)."""
     spark = corpus.sparkSession
     bands = sign_lsh_bands(corpus, dim=dim, rows_per_band=rows_per_band)
-    bands.write.parquet(os.path.join(out_dir, BANDS))
-    banded_pairs(
-        bands, "vec_id", "id_a", "id_b", cap=cap, keep_provenance=True
-    ).write.parquet(os.path.join(out_dir, PROV))
+    _write_state(bands, out_dir, BANDS)
+    _write_state(
+        banded_pairs(bands, "vec_id", "id_a", "id_b", cap=cap, keep_provenance=True),
+        out_dir,
+        PROV,
+    )
     cand = (
         spark.read.schema(STATE_SCHEMAS[PROV])
         .parquet(os.path.join(out_dir, PROV))
         .select("id_a", "id_b")
         .distinct()
     )
-    cosine_on_pairs(cand, corpus, "id_a", "id_b", dim=dim).write.parquet(
-        os.path.join(out_dir, VERIFIED)
-    )
+    _write_state(cosine_on_pairs(cand, corpus, "id_a", "id_b", dim=dim), out_dir, VERIFIED)
 
 
 def read_state(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
@@ -161,31 +176,9 @@ def apply_delta(
         # either way (the cosine is deterministic — that determinism is what
         # makes stored-vs-recomputed indistinguishable, pinned by the
         # incremental ≡ batch oracle).
-        from pkg2_spark.operators.similarity import unpack, wide_dot, wide_norm
-
         stored = ver_c.withColumnRenamed("cos", "_stored")
-        wa = vectors.selectExpr("vec_id AS id_a", *unpack("embedding", dim, "_wa")).withColumn(
-            "_na", wide_norm("_wa", dim)
-        )
-        wb = vectors.selectExpr("vec_id AS id_b", *unpack("embedding", dim, "_wb")).withColumn(
-            "_nb", wide_norm("_wb", dim)
-        )
-        return (
-            cand.join(stored, ["id_a", "id_b"], "left")
-            .join(wa, "id_a")
-            .join(wb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.when(F.col("_stored").isNotNull(), F.col("_stored"))
-                .otherwise(
-                    F.round(
-                        wide_dot("_wa", "_wb", dim) / (F.col("_na") * F.col("_nb")), 4
-                    )
-                )
-                .alias("cos"),
-            )
-        )
+        with_stored = cand.join(stored, ["id_a", "id_b"], "left")
+        return cosine_on_pairs(with_stored, vectors, "id_a", "id_b", dim=dim, stored="_stored")
     # Commit path: the merged state is written, so cand and the fresh
     # cosines are each consumed by several sinks — materialize cand once
     # (localCheckpoint) and keep the anti-join/semi-join split that lets
@@ -193,12 +186,12 @@ def apply_delta(
     cand = cand.transform(truncate_lineage)
     fresh = cand.join(ver_c, ["id_a", "id_b"], "left_anti")
     ver_fresh = cosine_on_pairs(fresh, vectors, "id_a", "id_b", dim=dim)
-    bands_c.unionByName(bands_d).write.parquet(os.path.join(commit_dir, BANDS))
-    prov_keep.unionByName(prov_new).write.parquet(os.path.join(commit_dir, PROV))
+    _write_state(bands_c.unionByName(bands_d), commit_dir, BANDS)
+    _write_state(prov_keep.unionByName(prov_new), commit_dir, PROV)
     # keep EVERY computed cosine (not just current candidates): buckets
     # only gain members, so a pair once discovered can be rediscovered
     # by a later shard and its verification is then free.
-    ver_c.unionByName(ver_fresh).write.parquet(os.path.join(commit_dir, VERIFIED))
+    _write_state(ver_c.unionByName(ver_fresh), commit_dir, VERIFIED)
     return (
         spark.read.schema(STATE_SCHEMAS[VERIFIED])
         .parquet(os.path.join(commit_dir, VERIFIED))
@@ -236,11 +229,10 @@ def compact_state(
     """
     st = read_state(spark, state_dir)
     cand = st[PROV].select("id_a", "id_b").distinct()
-    st[BANDS].repartition(target_files).write.parquet(os.path.join(out_dir, BANDS))
-    st[PROV].repartition(target_files).write.parquet(os.path.join(out_dir, PROV))
-    st[VERIFIED].join(cand, ["id_a", "id_b"], "leftsemi").repartition(
-        target_files
-    ).write.parquet(os.path.join(out_dir, VERIFIED))
+    _write_state(st[BANDS].repartition(target_files), out_dir, BANDS)
+    _write_state(st[PROV].repartition(target_files), out_dir, PROV)
+    verified = st[VERIFIED].join(cand, ["id_a", "id_b"], "leftsemi")
+    _write_state(verified.repartition(target_files), out_dir, VERIFIED)
 
 
 def retire_versions(version_dirs: list[str]) -> None:

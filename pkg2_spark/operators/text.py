@@ -16,6 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from pkg2_spark.operators.lsh import self_pairs
+
 
 def tokens_col(text_col: str = "text") -> Column:
     """Whitespace tokenizer with empty-token guard (both engines identical)."""
@@ -147,32 +149,18 @@ def blocked_token_pairs(
       filter or projection can re-inline the array work. (Plain column
       aliases don't survive: CollapseProject re-substitutes them.)
     """
-    from pkg2_spark.session import fan_out_scan
-
-    a = fan_out_scan(t).select(
-        F.col(id_col).alias("doc_a"),
-        F.col(block_col).alias("_blk_a"),
-        F.col(toks_col).alias("_ta"),
-    )
-    b = t.select(
-        F.col(id_col).alias("doc_b"),
-        F.col(block_col).alias("_blk_b"),
-        F.col(toks_col).alias("_tb"),
-    )
+    ta, tb = f"{toks_col}_a", f"{toks_col}_b"
     return (
-        a.join(
-            b,
-            (F.col("_blk_a") == F.col("_blk_b")) & (F.col("doc_a") < F.col("doc_b")),
-        )
+        self_pairs(t, id_col, [block_col], "doc_a", "doc_b", carry=[toks_col], fan_out=True)
         .select(
             "doc_a",
             "doc_b",
             F.explode(
                 F.array(
                     F.struct(
-                        F.size(F.array_intersect("_ta", "_tb")).alias("ni"),
-                        F.size("_ta").alias("la"),
-                        F.size("_tb").alias("lb"),
+                        F.size(F.array_intersect(ta, tb)).alias("ni"),
+                        F.size(ta).alias("la"),
+                        F.size(tb).alias("lb"),
                     )
                 )
             ).alias("_m"),

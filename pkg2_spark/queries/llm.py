@@ -23,7 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
-from pkg2_spark.operators.lsh import banded_pairs, capped_bands_sql
+from pkg2_spark.operators.lsh import attach_sides, banded_pairs, capped_bands_sql, self_pairs
 from pkg2_spark.operators.sampling import hash_sample, hash_split
 from pkg2_spark.operators.similarity import cosine4, cosine_pairs_wide, knn_bruteforce
 from pkg2_spark.operators.text import (
@@ -163,33 +163,11 @@ def q_llm_neardup_pairs(spark, sf_dir):
     # signature group); min/max partner need no dedup at all (min/max over a
     # multiset union). Every term is an O(m log m) sort per bucket instead
     # of O(m²) emitted pairs: the sweep corpus's two ~2.4k-member hot
-    # buckets were emitting ~5.6M pairs on ONE AQE-coalesced task. The
-    # uncapped self-join remains the general path for b ≠ 2.
+    # buckets were emitting ~5.6M pairs on ONE AQE-coalesced task.
+    assert _K // _BANDS_R == 2, "the inclusion-exclusion below needs b = 2"
     d = load_tables(spark, sf_dir)["documents"]
     sig = minhash_signatures(tokenize_distinct(d), _K)
     bands = lsh_bands(sig, _K, _BANDS_R)
-    if _K // _BANDS_R != 2:  # pragma: no cover — b=2 pinned by module consts
-        a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        b = bands.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("band_id").alias("bid2"),
-            F.col("band_key").alias("bkey2"),
-        )
-        pairs = (
-            a.join(
-                b,
-                (F.col("band_id") == F.col("bid2"))
-                & (F.col("band_key") == F.col("bkey2"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        return pairs.groupBy("doc_a").agg(
-            F.count(F.lit(1)).alias("n_candidates"),
-            F.min("doc_b").alias("min_cand"),
-            F.max("doc_b").alias("max_cand"),
-        )
     w = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
     w_after = w.rowsBetween(1, Window.unboundedFollowing)
     bucket = Window.partitionBy("band_id", "band_key")
@@ -560,32 +538,19 @@ def q_llm_simhash_dup(spark, sf_dir):
             F.array(F.col("simhash") % 256, (F.col("simhash") / 256).cast("long"))
         ).alias("half_id", "half_val"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"), "half_id", "half_val"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sb"),
-        F.col("half_id").alias("hid2"),
-        F.col("half_val").alias("hval2"),
-    )
+    sa, sb = F.col("simhash_a"), F.col("simhash_b")
     return (
-        a.join(
-            b,
-            (F.col("half_id") == F.col("hid2"))
-            & (F.col("half_val") == F.col("hval2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
+        self_pairs(bands, "doc_id", ["half_id", "half_val"], "doc_a", "doc_b", carry=["simhash"])
         .select(
             "doc_a",
             "doc_b",
-            "sa",
-            "sb",
+            "simhash_a",
+            "simhash_b",
             "half_id",
-            F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("int").alias("hamming"),
+            F.bit_count(sa.bitwiseXOR(sb)).cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= 1)
-        .filter((F.col("half_id") == 0) | (F.col("sa") % 256 != F.col("sb") % 256))
+        .filter((F.col("half_id") == 0) | (sa % 256 != sb % 256))
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -1433,13 +1398,10 @@ def q_llm_jaccard_lsh(spark, sf_dir):
     bands = lsh_bands(minhash_signatures(tokenize_distinct(d), _K), _K, _BANDS_R)
     cand = banded_pairs(bands, "doc_id", "doc_a", "doc_b", cap=_BUCKET_CAP)
     t = d.select("doc_id", F.array_distinct(tokens_col()).alias("toks"))
-    ta = t.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    tb = t.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    uni = F.size("ta") + F.size("tb") - inter
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    uni = F.size("toks_a") + F.size("toks_b") - inter
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
+        attach_sides(cand, t, "doc_id", "doc_a", "doc_b", ["toks"])
         .select(
             "doc_a",
             "doc_b",
@@ -1749,19 +1711,8 @@ def q_llm_minhash_est(spark, sf_dir):
     d = load_tables(spark, sf_dir)["documents"]
     sig = minhash_signatures(tokenize_distinct(d), _K).transform(truncate_lineage)
     bands = lsh_bands(sig, _K, _BANDS_R)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band_id").alias("bid2"),
-        F.col("band_key").alias("bkey2"),
-    )
     cand = (
-        a.join(
-            b,
-            (F.col("band_id") == F.col("bid2"))
-            & (F.col("band_key") == F.col("bkey2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
+        self_pairs(bands, "doc_id", ["band_id", "band_key"], "doc_a", "doc_b")
         .filter((F.col("doc_a") % 5 == 0) & (F.col("doc_b") % 2 == 0))
         .select("doc_a", "doc_b")
         .distinct()
@@ -1776,19 +1727,14 @@ def q_llm_minhash_est(spark, sf_dir):
     cand = cand.repartition(
         spark.sparkContext.defaultParallelism, "doc_a", "doc_b"
     )
-    siga = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_K)])
-    sigb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_K)])
+    mh = [f"mh{i}" for i in range(_K)]
     t = d.select("doc_id", F.array_distinct(tokens_col()).alias("toks"))
-    ta = t.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    tb = t.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    n_agree = sum((F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(_K))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    uni = F.size("ta") + F.size("tb") - inter
+    n_agree = sum((F.col(f"{c}_a") == F.col(f"{c}_b")).cast("int") for c in mh)
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    uni = F.size("toks_a") + F.size("toks_b") - inter
+    with_sig = attach_sides(cand, sig, "doc_id", "doc_a", "doc_b", mh)
     return (
-        cand.join(siga, "doc_a")
-        .join(sigb, "doc_b")
-        .join(ta, "doc_a")
-        .join(tb, "doc_b")
+        attach_sides(with_sig, t, "doc_id", "doc_a", "doc_b", ["toks"])
         .select(
             "doc_a",
             "doc_b",
@@ -2243,11 +2189,8 @@ def q_llm_decontam_sem(spark, sf_dir):
     s = hash_split(e.select("vec_id"), "vec_id", {"train": 0.9, "eval": 0.1})
     bands = sign_lsh_bands(e, dim=64, rows_per_band=8)
     cand = banded_pairs(bands, "vec_id", "id_a", "id_b", cap=_BUCKET_CAP)
-    sa = s.select(F.col("vec_id").alias("id_a"), F.col("split").alias("split_a"))
-    sb = s.select(F.col("vec_id").alias("id_b"), F.col("split").alias("split_b"))
     crossed = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        attach_sides(cand, s, "vec_id", "id_a", "id_b", ["split"])
         .filter(F.col("split_a") != F.col("split_b"))
         .select(
             F.when(F.col("split_a") == "eval", F.col("id_a"))

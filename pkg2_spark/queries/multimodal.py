@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators.lsh import self_pairs
 from pkg2_spark.operators.multimodal import decode_features, with_binary_payload
 from pkg2_spark.registry import query
 
@@ -198,24 +199,12 @@ def q_mm_phash_dup(spark, sf_dir):
             )
         ).alias("ch"),
     ).select("doc_id", "phash", F.col("ch.chunk_id").alias("chunk_id"), F.col("ch.chunk_val").alias("chunk_val"))
-    a = c.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("pa"), "chunk_id", "chunk_val")
-    b = c.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("pb"),
-        F.col("chunk_id").alias("cid2"),
-        F.col("chunk_val").alias("cval2"),
-    )
     cand = (
-        a.join(
-            b,
-            (F.col("chunk_id") == F.col("cid2"))
-            & (F.col("chunk_val") == F.col("cval2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "pa", "doc_b", "pb")
+        self_pairs(c, "doc_id", ["chunk_id", "chunk_val"], "doc_a", "doc_b", carry=["phash"])
+        .select("doc_a", "phash_a", "doc_b", "phash_b")
         .distinct()
     )
-    hamming = F.bit_count(F.expr("pa ^ pb"))
+    hamming = F.bit_count(F.expr("phash_a ^ phash_b"))
     return cand.select(
         "doc_a", "doc_b", hamming.cast("int").alias("hamming")
     ).filter(F.col("hamming") <= 1)

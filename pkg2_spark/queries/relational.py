@@ -25,7 +25,7 @@ import shutil
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from pkg2_spark.catalog import load_tables
+from pkg2_spark.catalog import load_tables, sf_tag
 from pkg2_spark.registry import query
 from pkg2_spark.session import BoundedMemo, session_key
 
@@ -623,6 +623,14 @@ def q_cast(spark, sf_dir):
     )
 
 
+def bucketed_tables(sf_dir: str) -> tuple[str, str]:
+    """Catalog names of q_sink_bucketed's (orders, customer) tables for
+    ``sf_dir``: content-addressed like catalog._ensure_stats_tables, so
+    one session can hold the tables of several scale factors."""
+    tag = sf_tag(sf_dir)
+    return f"pkg2_{tag}_bucketed_orders", f"pkg2_{tag}_bucketed_customer"
+
+
 @query(
     "q_sink_bucketed",
     oracle="""
@@ -638,6 +646,7 @@ def q_sink_bucketed(spark, sf_dir):
     # across a 100 TB workload (pay the shuffle once at ingest, never again).
     # tests/test_plans.py pins the no-Exchange property of this join.
     t = load_tables(spark, sf_dir)
+    orders_tbl, customer_tbl = bucketed_tables(sf_dir)
     # Written once per (session, sf_dir): bucketing pays its shuffle at
     # ingest precisely so repeated queries don't — re-creating the tables on
     # every invocation would forfeit the pattern being demonstrated.
@@ -648,20 +657,20 @@ def q_sink_bucketed(spark, sf_dir):
         from urllib.parse import urlparse
 
         warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for name in ("pkg2_bucketed_orders", "pkg2_bucketed_customer"):
+        for name in (orders_tbl, customer_tbl):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
         (t["orders"].write.format("parquet")
          .bucketBy(8, "o_custkey").sortBy("o_custkey")
-         .saveAsTable("pkg2_bucketed_orders"))
+         .saveAsTable(orders_tbl))
         (t["customer"].write.format("parquet")
          .bucketBy(8, "c_custkey").sortBy("c_custkey")
-         .saveAsTable("pkg2_bucketed_customer"))
+         .saveAsTable(customer_tbl))
         return True
 
     _BUCKETED_DONE.get((session_key(spark), sf_dir), write_bucketed)
-    o = spark.table("pkg2_bucketed_orders")
-    c = spark.table("pkg2_bucketed_customer")
+    o = spark.table(orders_tbl)
+    c = spark.table(customer_tbl)
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")

@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators.lsh import self_pairs
 from pkg2_spark.operators.sampling import BUCKETS as _BUCKETS
 from pkg2_spark.operators.sampling import frac_to_threshold as _frac_to_threshold
 from pkg2_spark.operators.sampling import hash_split
@@ -649,21 +650,19 @@ def q_sketch_kmv_intersect(spark, sf_dir):
     syn = part.groupBy("g").agg(
         F.slice(F.array_sort(F.flatten(F.collect_list("ks"))), 1, _K).alias("ks")
     )
-    a = syn.select(F.col("g").alias("g_a"), F.col("ks").alias("ka"))
-    b = syn.select(F.col("g").alias("g_b"), F.col("ks").alias("kb"))
-    pairs = a.join(b, F.col("g_a") < F.col("g_b")).select(
+    pairs = self_pairs(syn, "g", [], "g_a", "g_b", carry=["ks"]).select(
         "g_a",
         "g_b",
-        "ka",
-        "kb",
-        F.expr(f"slice(array_sort(array_distinct(concat(ka, kb))), 1, {_K})").alias(
+        "ks_a",
+        "ks_b",
+        F.expr(f"slice(array_sort(array_distinct(concat(ks_a, ks_b))), 1, {_K})").alias(
             "comb"
         ),
     )
     est = pairs.select(
         "g_a",
         "g_b",
-        F.expr("size(array_intersect(comb, array_intersect(ka, kb)))")
+        F.expr("size(array_intersect(comb, array_intersect(ks_a, ks_b)))")
         .cast("int")
         .alias("n_match"),
         F.expr(f"CAST({_NUM} div ({_v32_spark(f'element_at(comb, {_K})')}) AS BIGINT)").alias(
@@ -671,10 +670,8 @@ def q_sketch_kmv_intersect(spark, sf_dir):
         ),
     )
     keys = li.select(F.col("l_returnflag").alias("g"), F.col("l_orderkey").alias("o")).distinct()
-    xa = keys.select(F.col("g").alias("g_a"), "o")
-    xb = keys.select(F.col("g").alias("g_b"), F.col("o").alias("o2"))
     exact = (
-        xa.join(xb, (F.col("o") == F.col("o2")) & (F.col("g_a") < F.col("g_b")))
+        self_pairs(keys, "g", ["o"], "g_a", "g_b")
         .groupBy("g_a", "g_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
     )

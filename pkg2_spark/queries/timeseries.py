@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators.lsh import self_pairs
 from pkg2_spark.registry import query
 
 
@@ -1621,19 +1622,9 @@ def q_ts_theil_sen(spark, sf_dir):
             ).alias("m")
         )
     )
-    a = grid.select(
-        "event_type", F.col("t").alias("t1"), F.col("m").alias("m1")
-    )
-    b = grid.select(
-        F.col("event_type").alias("et2"),
-        F.col("t").alias("t2"),
-        F.col("m").alias("m2"),
-    )
-    slopes = a.join(
-        b, (F.col("event_type") == F.col("et2")) & (F.col("t1") < F.col("t2"))
-    ).select(
+    slopes = self_pairs(grid, "t", ["event_type"], "t1", "t2", carry=["m"]).select(
         "event_type",
-        F.floor((F.col("m2") - F.col("m1")) * 1000.0 / (F.col("t2") - F.col("t1")))
+        F.floor((F.col("m_b") - F.col("m_a")) * 1000.0 / (F.col("t2") - F.col("t1")))
         .cast("long")
         .alias("s"),
     )
@@ -1760,20 +1751,11 @@ def q_ts_mann_kendall(spark, sf_dir):
             ).alias("m")
         )
     )
-    a = grid.select("event_type", F.col("t").alias("t1"), F.col("m").alias("m1"))
-    b = grid.select(
-        F.col("event_type").alias("et2"),
-        F.col("t").alias("t2"),
-        F.col("m").alias("m2"),
+    m1, m2 = F.col("m_a"), F.col("m_b")
+    sgn = F.when(m2 > m1, F.lit(1)).when(m2 < m1, F.lit(-1)).otherwise(F.lit(0))
+    pairs = self_pairs(grid, "t", ["event_type"], "t1", "t2", carry=["m"]).select(
+        "event_type", sgn.alias("sgn")
     )
-    sgn = (
-        F.when(F.col("m2") > F.col("m1"), F.lit(1))
-        .when(F.col("m2") < F.col("m1"), F.lit(-1))
-        .otherwise(F.lit(0))
-    )
-    pairs = a.join(
-        b, (F.col("event_type") == F.col("et2")) & (F.col("t1") < F.col("t2"))
-    ).select("event_type", sgn.alias("sgn"))
     return pairs.groupBy("event_type").agg(
         F.sum("sgn").cast("long").alias("s_stat"),
         F.count(F.lit(1)).cast("long").alias("n_pairs"),

@@ -41,6 +41,22 @@ def _events_schema(spark: SparkSession, src: str):
     return _SCHEMA_MEMO.get(key, lambda: spark.read.parquet(src).schema)
 
 
+def _refresh_copy(src: str, dst: str) -> None:
+    """Keep ``dst`` a current copy of ``src``. Each copy is stamped with
+    the source's ``(st_size, st_mtime_ns)`` as stat'ed before copying, and
+    is made again whenever either differs: a rewrite of the source, or an
+    older file of the same size moved in with its mtime preserved."""
+    st = os.stat(src)
+    try:
+        cur = os.stat(dst)
+    except FileNotFoundError:
+        cur = None
+    if cur is not None and (cur.st_size, cur.st_mtime_ns) == (st.st_size, st.st_mtime_ns):
+        return
+    shutil.copyfile(src, dst)
+    os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns))
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table (file source, availableNow-ready).
 
@@ -57,16 +73,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_dir = src
     else:
         os.makedirs(src_dir, exist_ok=True)
-        dst = os.path.join(src_dir, "events.parquet")
-        # Re-copy when the source file changed (the driver regenerates
-        # testdata between rounds; a stale copy would diverge from the
-        # schema read below).
-        if (
-            not os.path.exists(dst)
-            or os.path.getsize(dst) != os.path.getsize(src)
-            or os.path.getmtime(dst) < os.path.getmtime(src)
-        ):
-            shutil.copyfile(src, dst)
+        # Re-copy when the source file changed (test data can be
+        # regenerated in place; a stale copy would diverge from the schema
+        # read below).
+        _refresh_copy(src, os.path.join(src_dir, "events.parquet"))
     schema = _events_schema(spark, src)
     raw = spark.readStream.schema(schema).parquet(src_dir)
     dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}

@@ -19,6 +19,7 @@ occurrence fails until it adopts the discipline.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -99,3 +100,61 @@ def test_lineage_truncation_has_one_primitive():
         if re.search(r"\.localCheckpoint\(", p.read_text())
     }
     assert callers == {"session.py"}, callers
+
+
+def _is_f_col(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "col"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def _hand_rolled_pair_joins(source: str) -> list[int]:
+    """Line numbers of ``.join(...)`` calls whose condition orders two
+    ``F.col`` ids with ``<`` — the shape of a hand-written pair self-join.
+    SQL strings (the DuckDB oracles) are constants, not calls, so they
+    never match."""
+    lines = []
+    for call in ast.walk(ast.parse(source)):
+        if not (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and call.func.attr == "join"
+        ):
+            continue
+        conds = call.args[1:2] + [kw.value for kw in call.keywords if kw.arg == "on"]
+        for cond in conds:
+            for node in ast.walk(cond):
+                if (
+                    isinstance(node, ast.Compare)
+                    and len(node.ops) == 1
+                    and isinstance(node.ops[0], ast.Lt)
+                    and _is_f_col(node.left)
+                    and _is_f_col(node.comparators[0])
+                ):
+                    lines.append(call.lineno)
+    return lines
+
+
+def test_pair_self_join_has_one_primitive():
+    # Every blocked self-join goes through operators/lsh.py::self_pairs,
+    # so pair orientation, hints and carried columns are decided once.
+    queries = Path(__file__).resolve().parent.parent / "pkg2_spark" / "queries"
+    offenders = {
+        f"{p.name}:{line}"
+        for p in sorted(queries.glob("*.py"))
+        for line in _hand_rolled_pair_joins(p.read_text())
+    }
+    assert not offenders, f"hand-rolled pair self-joins (use lsh.self_pairs): {sorted(offenders)}"
+
+
+def test_pair_join_detector_sees_the_hand_rolled_shape():
+    src = (
+        "pairs = a.join(b, (F.col('k') == F.col('k2')) & (F.col('id_a') < F.col('id_b')))\n"
+        "other = a.join(b, F.col('x') == F.col('y'))\n"
+        "sql = 'SELECT * FROM t a JOIN t b ON a.id < b.id'\n"
+    )
+    assert _hand_rolled_pair_joins(src) == [1]

@@ -1141,6 +1141,56 @@ def test_avro_codegen_decoder_matches_closure_walk(tmp_path):
     assert A._compile_record_decoder([("a", ["null", "string", "long"])]) is None
 
 
+def test_avro_codegen_declines_without_touching_lines():
+    # A type the generator does not cover returns False and leaves the
+    # caller's lines as they were — also when the miss is nested inside a
+    # null-union whose branch preamble was already generated.
+    from pkg2_spark import avroio as A
+
+    for typ in (
+        ["null", "string", "long"],
+        ["null", {"type": "map", "values": "long"}],
+        ["null", ["null", "int", "long"]],
+    ):
+        lines = ["    keep"]
+        assert A._emit_value_code(typ, "_v0", lines, "    ", [0]) is False
+        assert lines == ["    keep"], typ
+
+
+def test_self_pairs_emits_each_same_key_pair_once(spark):
+    from pkg2_spark.operators.lsh import self_pairs
+
+    df = spark.createDataFrame(
+        [(3, "x", 30), (1, "x", 10), (2, "x", 20), (5, "y", 50), (4, "y", 40), (6, "z", 60)],
+        "id long, k string, v long",
+    )
+    for kw in ({}, {"shuffle_hash": True}, {"fan_out": True}):
+        out = self_pairs(df, "id", ["k"], "l", "r", carry=["v"], **kw)
+        assert out.columns == ["l", "r", "k", "v_a", "v_b"]
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 2, "x", 10, 20),
+            (1, 3, "x", 10, 30),
+            (2, 3, "x", 20, 30),
+            (4, 5, "y", 40, 50),
+        ]
+    # no blocking key: every unordered pair once
+    assert self_pairs(df, "id", [], "l", "r").count() == 6 * 5 // 2
+
+
+def test_attach_sides_inner_and_left(spark):
+    from pkg2_spark.operators.lsh import attach_sides
+
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "l long, r long")
+    side = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+
+    def rows(how):
+        out = attach_sides(pairs, side, "id", "l", "r", ["s"], how=how)
+        return sorted(map(tuple, out.select("l", "r", "s_a", "s_b").collect()))
+
+    assert rows("inner") == [(1, 2, "a", "b")]
+    assert rows("left") == [(1, 2, "a", "b"), (1, 3, "a", None)]
+
+
 def test_weighted_sample_oversamples_heavy_docs(spark, sf_dir):
     from pkg2_spark.registry import all_queries
 

@@ -88,12 +88,15 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     # correctly broadcasts the small side, which also avoids the shuffle but
     # proves nothing about bucketing — so disable auto-broadcast to reveal
     # the fact-fact shape the layout is designed for.
+    from pkg2_spark.queries.relational import bucketed_tables
+
     all_queries()["q_sink_bucketed"](spark, sf_dir).collect()  # write tables
+    orders_tbl, customer_tbl = bucketed_tables(sf_dir)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        o = spark.table("pkg2_bucketed_orders")
-        c = spark.table("pkg2_bucketed_customer")
+        o = spark.table(orders_tbl)
+        c = spark.table(customer_tbl)
         df = o.join(c, o.o_custkey == c.c_custkey).select("o_orderkey", "c_name")
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
@@ -103,6 +106,24 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     assert "SortMergeJoin" in plan
     assert plan.count("SelectedBucketsCount: 8 out of 8") == 2
     assert "Exchange" not in plan, "bucketed join inputs were re-shuffled"
+
+
+def test_bucketed_tables_follow_the_sf_dir(spark, sf_dir):
+    # One session visiting scale factors A -> B -> A must read A's tables
+    # again on the second visit, not B's (the tables are written once per
+    # (session, sf_dir), so their names must depend on sf_dir).
+    import os
+
+    root, name = os.path.split(sf_dir.rstrip("/"))
+    other = os.path.join(root, "sf0.01" if name != "sf0.01" else "sf0.001")
+    q = all_queries()["q_sink_bucketed"]
+
+    def rows(d):
+        return sorted(map(tuple, q(spark, d).collect()))
+
+    first, b, again = rows(sf_dir), rows(other), rows(sf_dir)
+    assert first == again
+    assert first != b
 
 
 def test_salted_agg_two_stage_shape(spark, sf_dir):

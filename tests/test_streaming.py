@@ -399,3 +399,22 @@ def test_socket_source_drives_the_same_streaming_graph(spark):
         hold.set()
         srv.shutdown()
         srv.server_close()
+
+
+def test_events_copy_follows_an_older_same_size_source(tmp_path):
+    # The stream reads a copy of events.parquet. Replacing the source by
+    # an OLDER file of the same size, with its mtime preserved, must
+    # still refresh the copy.
+    from pkg2_spark.streaming.harness import _refresh_copy
+
+    src, dst, older = tmp_path / "events.parquet", tmp_path / "copy", tmp_path / "older"
+    older.write_bytes(b"old-data")
+    os.utime(older, ns=(10**18, 10**18))
+    src.write_bytes(b"new-data")
+    _refresh_copy(str(src), str(dst))
+    assert dst.read_bytes() == b"new-data"
+    shutil.copy2(older, src)
+    assert src.stat().st_size == dst.stat().st_size
+    assert src.stat().st_mtime_ns < dst.stat().st_mtime_ns
+    _refresh_copy(str(src), str(dst))
+    assert dst.read_bytes() == b"old-data"

@@ -546,6 +546,25 @@ def test_dedup_index_chained_increments_equal_batch(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def test_dedup_index_refuses_off_format_state_at_write(spark, sf_dir, tmp_path):
+    # Readers apply STATE_SCHEMAS without inference, so a corpus whose ids
+    # are not bigint must be refused before anything is written.
+    import os
+
+    import pyspark.sql.functions as F
+    import pytest
+
+    from pkg2_spark.catalog import load_tables
+    from pkg2_spark.operators.dedup_index import build_state
+
+    e = load_tables(spark, sf_dir)["embeddings"]
+    corpus = e.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
+    out = tmp_path / "state_v0"
+    with pytest.raises(ValueError, match=r"'bands' has columns \(vec_id int, "):
+        build_state(corpus, str(out))
+    assert not os.path.exists(out / "bands")
+
+
 def test_dedup_index_compaction_preserves_chain_equality(spark, sf_dir, tmp_path):
     # The LIFECYCLE contract: build -> delta(commit) -> delta(commit) ->
     # COMPACT -> retire superseded -> delta against the compacted head.
